@@ -5,12 +5,13 @@ Started by ``perfbench/run.py`` (which gives the process its own
 
 A run
 
-1. writes the input tables (``datagen``, with the fixed ``DATA_SEED``);
-2. sets up ``SETUP_REPS`` times -- session start, registry import and the
-   flagship query -- restarting the SparkContext and re-importing the
-   package in between; ``setup_s`` is the median;
-3. runs every workload query once and compares its rows with the
-   query's DuckDB oracle (``tests/oracle_harness.compare``); this pass also
+1. checks that its input is the benchmark's copy of the fixed test data
+   (``testdata/sf<sf>/SHA256SUMS``); the tables are read in place;
+2. sets up once, cold: JVM and session start, registry import and the
+   flagship query (``setup_s``);
+3. runs every workload query once, in a fixed order, compares its rows
+   with the query's DuckDB oracle (``tests/oracle_harness.compare``) and
+   reads the driver's live heap (``peak_live_heap_mb``); this pass also
    warms the JVM and is not timed;
 4. runs timed passes over the workload, back to back (a closed loop with
    one client), in an order fixed by ``--seed``, until ``--seconds`` have
@@ -18,8 +19,9 @@ A run
    planning of the returned frame, and a ``noop`` write of it; then the
    driver's post-work (``clearCache``, stopping stray streams).
 
-With ``--trace 1`` the timed passes alternate between untraced and traced,
-at least two of each;
+At least two untraced passes run. With ``--trace 1`` the timed passes
+alternate between untraced and traced, at least two of each (one of
+each once ``RUN_BUDGET_S`` has passed);
 traced passes record spans (``spans.install``), Catalyst phase times and
 status-store deltas, and give the per-layer metrics.
 
@@ -31,6 +33,7 @@ per-layer ones with ``--trace 1``).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import importlib.util
 import json
 import math
@@ -44,24 +47,21 @@ import time
 import traceback
 import urllib.request
 
-from perfbench import datagen, spans
+from perfbench import spans
 from perfbench.workloads import WORKLOADS
 
-# The tables are the same in every run: generated values can land a
-# rounded sum on a half-cent, where Spark and DuckDB may round apart; every
-# registered query of the three workloads matches its oracle on these.
-DATA_SEED = 1
-SETUP_REPS = 3
-# Stop starting passes this long after the process started, so that a run
-# on a slow host still ends well inside its time limit.
+# Copies of the fixed test data, one directory per scale factor.
+TESTDATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "testdata")
+# Once each kind of pass has run, stop starting passes this long after the
+# start, so that a run of warehouse_reads (30 s passes) ends inside
+# run.py's time limit. Runs of the driven workloads end well before it.
 RUN_BUDGET_S = 120.0
 
 END_TO_END = {
     "setup_s": "s",
     "pass_s": "s",
-    "query_p50_s": "s",
-    "query_p90_s": "s",
-    "peak_rss_mb": "MB",
+    "query_geomean_s": "s",
+    "peak_live_heap_mb": "MB",
 }
 PER_LAYER = {
     "catalog.reads": "count",
@@ -115,8 +115,15 @@ PER_LAYER_EXTRA = {
     "txn.publish_s": "s",
 }
 # End-to-end figures printed in the summary only: the streaming ones exist
-# on webhook_ingest alone, and failed_frac is 0 when the program is right.
+# on webhook_ingest alone; failed_frac is 0 when the program is right; a
+# run holds 6-10 query executions of 3-5 queries, so query_p50_s flips
+# between two queries' latencies and query_p90_s is the slowest one or
+# two executions; and peak_rss_mb follows the collector's heap sizing,
+# which spreads it by 20-40% between runs.
 SUMMARY_ONLY = {
+    "query_p50_s": "s",
+    "query_p90_s": "s",
+    "peak_rss_mb": "MB",
     "batch_p50_ms": "ms",
     "batch_p90_ms": "ms",
     "stream_rows_per_s": "1/s",
@@ -132,9 +139,24 @@ def parse_args(argv: list[str] | None) -> argparse.Namespace:
                    help="how long the timed passes run")
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--cores", type=int, default=4, help="local[N] worker threads")
-    p.add_argument("--sf", type=float, default=0.01, help="scale factor of the inputs")
+    p.add_argument("--sf", default="0.01", choices=scale_factors(),
+                   help="scale factor: which copy of the test data to read")
     p.add_argument("--out", help="directory for the full JSON artifact of the run")
     return p.parse_args(argv)
+
+
+def scale_factors() -> list[str]:
+    return sorted(d.removeprefix("sf") for d in os.listdir(TESTDATA) if d.startswith("sf"))
+
+
+def verify_testdata(data_dir: str) -> None:
+    """Fail unless every table listed in ``SHA256SUMS`` has its recorded bytes."""
+    with open(os.path.join(data_dir, "SHA256SUMS")) as fh:
+        sums = [line.split() for line in fh if line.strip()]
+    for digest, name in sums:
+        with open(os.path.join(data_dir, name), "rb") as fh:
+            if hashlib.sha256(fh.read()).hexdigest() != digest:
+                raise SystemExit(f"perfbench: {data_dir}/{name} is not the fixed test data")
 
 
 # ---------------------------------------------------------------- set-up
@@ -142,14 +164,13 @@ def parse_args(argv: list[str] | None) -> argparse.Namespace:
 def start_session(cores: int, work_dir: str):
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.appName("perfbench").master(f"local[{cores}]")
-             .config("spark.driver.memory", "2g")
-             # A fixed, pre-touched heap: its resident size no longer
-             # depends on when the collector chose to grow it, so
-             # peak_rss_mb moves with what lives outside the heap.
-             .config("spark.driver.extraJavaOptions", "-Xms2g -XX:+AlwaysPreTouch")
+             # the program's own driver memory (session.get_spark)
+             .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "4g"))
              .config("spark.sql.shuffle.partitions", str(max(cores * 2, 8)))
              .config("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
              .config("spark.ui.port", "0")  # REST face of the status store
+             .config("spark.ui.retainedStages", "100000")
+             .config("spark.ui.retainedJobs", "100000")
              .config("spark.ui.showConsoleProgress", "false")
              .config("spark.local.dir", os.path.join(work_dir, "local"))
              .config("spark.sql.warehouse.dir", os.path.join(work_dir, "warehouse"))
@@ -159,20 +180,13 @@ def start_session(cores: int, work_dir: str):
 
 
 def set_up(cores: int, work_dir: str, data_dir: str):
-    """One set-up: session start, registry import, flagship query."""
+    """One set-up: JVM and session start, registry import, flagship query."""
     t0 = time.perf_counter()
     spark = start_session(cores, work_dir)
     from zoom_etl_spark import plans, registry
     specs = registry.all_queries()
     plans.flagship(spark, data_dir).collect()
     return spark, specs, time.perf_counter() - t0
-
-
-def forget_package() -> None:
-    """Drop the package from the import cache so the next set-up imports it."""
-    for name in [m for m in sys.modules
-                 if m == "zoom_etl_spark" or m.startswith("zoom_etl_spark.")]:
-        del sys.modules[name]
 
 
 def peak_rss_mb(spark) -> tuple[float, float]:
@@ -185,6 +199,17 @@ def peak_rss_mb(spark) -> tuple[float, float]:
         raise RuntimeError(f"no VmHWM for pid {pid}")
     jvm_pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
     return hwm_kb(jvm_pid) / 1024, hwm_kb(os.getpid()) / 1024
+
+
+def live_heap_mb(spark) -> float:
+    """Heap the driver JVM holds live: used heap right after a full
+    collection. Read at the end of each query of the output check, while
+    the query's frame, and with it any block it cached or checkpointed,
+    is still held."""
+    jvm = spark.sparkContext._jvm
+    jvm.java.lang.System.gc()
+    usage = jvm.java.lang.management.ManagementFactory.getMemoryMXBean().getHeapMemoryUsage()
+    return usage.getUsed() / 2**20
 
 
 # ------------------------------------------------------------ measuring
@@ -282,6 +307,7 @@ class Workload:
     def __init__(self, spark, specs, data_dir, tracer):
         self.spark, self.specs, self.data_dir, self.tracer = spark, specs, data_dir, tracer
         self.attempted = 0
+        self.live_heap_mb: list[float] = []
         self.failures: list[tuple[str, str]] = []
 
     def run_query(self, name: str, check=None):
@@ -319,6 +345,7 @@ class Workload:
     def check_pass(self, order: list[str], oracle_compare) -> None:
         def check(name, df):
             report = oracle_compare(df, self.specs[name].oracle)
+            self.live_heap_mb.append(live_heap_mb(self.spark))
             return None if report["ok"] else f"oracle mismatch: {report['detail']}"
         for name in order:
             self.run_query(name, check)
@@ -433,21 +460,21 @@ def layer_self_times(p: dict) -> list[dict]:
     return out
 
 
-def end_to_end(setups, untimed, passes, rss_mb) -> tuple[dict, dict]:
+def end_to_end(setup_s, untimed, passes, live_heap, rss_mb) -> tuple[dict, dict]:
     """(JSON metrics, summary-only figures) over the untraced passes."""
     plain = [p for p in passes if not p["traced"]]
     lat = [q["latency_s"] for p in plain for q in p["queries"]]
     p90, n, beyond = tail(lat)
     metrics = {
-        "setup_s": statistics.median(setups),
+        "setup_s": setup_s,
         "pass_s": statistics.median(p["wall_s"] for p in plain),
-        "query_p50_s": statistics.median(lat),
-        "query_p90_s": p90,
-        "peak_rss_mb": rss_mb,
+        "query_geomean_s": statistics.geometric_mean(lat),
+        "peak_live_heap_mb": max(live_heap, default=0.0),
     }
     drains = [d for p in plain for d in p["drains"]]
-    extra = {"query_samples": n, "query_beyond_p90": beyond, "passes": len(plain),
-             "setup_reps_s": setups, "untimed": untimed}
+    extra = {"query_p50_s": statistics.median(lat), "query_p90_s": p90,
+             "query_samples": n, "query_beyond_p90": beyond, "passes": len(plain),
+             "peak_rss_mb": rss_mb, "untimed": untimed}
     trig = [ms for d in drains for ms in d["trigger_ms"]]
     if trig:
         b90, bn, bbeyond = tail(trig)
@@ -467,20 +494,13 @@ def main(argv: list[str] | None = None) -> int:
     for module in ("zoom_etl_spark", "tests.oracle_harness"):
         if importlib.util.find_spec(module) is None:
             raise SystemExit(f"perfbench: {module} not found; run from a checkout root")
+    data_dir = os.path.join(TESTDATA, f"sf{args.sf}")
+    verify_testdata(data_dir)
     scratch = tempfile.mkdtemp(prefix="perfbench-")
     spark = None
     try:
-        t = time.perf_counter()
-        data_dir = datagen.write(os.path.join(scratch, "data"), DATA_SEED, args.sf)
-        untimed = {"datagen_s": time.perf_counter() - t}
-
-        setups = []
-        for rep in range(SETUP_REPS):
-            if spark is not None:
-                spark.stop()
-                forget_package()
-            spark, specs, seconds = set_up(args.cores, scratch, data_dir)
-            setups.append(seconds)
+        untimed: dict[str, float] = {}
+        spark, specs, setup_s = set_up(args.cores, scratch, data_dir)
 
         from tests.oracle_harness import compare, duck_connection
         jsc = spark.sparkContext._jsc.sc()
@@ -491,8 +511,8 @@ def main(argv: list[str] | None = None) -> int:
 
         t = time.perf_counter()
         con = duck_connection(data_dir)
-        work.check_pass(rng.sample(names, len(names)),
-                        lambda df, sql: compare(df, con, sql))
+        # A fixed order: each live-heap reading then follows the same work.
+        work.check_pass(sorted(names), lambda df, sql: compare(df, con, sql))
         con.close()
         untimed["check_pass_s"] = time.perf_counter() - t
 
@@ -503,16 +523,18 @@ def main(argv: list[str] | None = None) -> int:
             traced = bool(args.trace) and len(passes) % 2 == 1
             passes.append(work.timed_pass(rng.sample(names, len(names)),
                                           meter if traced else None))
-            now = time.perf_counter()
-            traced_passes = sum(p["traced"] for p in passes)
-            enough = now - t0 >= args.seconds and (not args.trace or traced_passes >= 2)
-            if enough or now - t_start > RUN_BUDGET_S:
+            now, n_traced = time.perf_counter(), sum(p["traced"] for p in passes)
+            n_plain = len(passes) - n_traced
+            if n_plain >= 2 and n_traced >= 2 * args.trace and now - t0 >= args.seconds:
+                break
+            if n_plain >= 1 and n_traced >= args.trace and now - t_start > RUN_BUDGET_S:
                 break
         jvm_mb, python_mb = peak_rss_mb(spark)
         untimed.update(jvm_peak_rss_mb=jvm_mb, python_peak_rss_mb=python_mb)
         spans.uninstall(undo)
 
-        metrics, extra = end_to_end(setups, untimed, passes, jvm_mb + python_mb)
+        metrics, extra = end_to_end(setup_s, untimed, passes, work.live_heap_mb,
+                                    jvm_mb + python_mb)
         extra["failed_frac"] = len(work.failures) / work.attempted
         units = dict(END_TO_END)
         layers: dict[str, float] = {}
@@ -520,8 +542,12 @@ def main(argv: list[str] | None = None) -> int:
             traced = [p for p in passes if p["traced"]]
             per_pass = [layer_metrics(p, args.cores) for p in traced]
             layers = {k: statistics.median(m[k] for m in per_pass) for k in per_pass[0]}
+            # the first pass, untraced, is the slowest of a run: leave it out
+            # when another untraced pass ran
+            plain = ([p["wall_s"] for p in passes[1:] if not p["traced"]]
+                     or [passes[0]["wall_s"]])
             layers["trace.overhead_frac"] = (
-                statistics.median(p["wall_s"] for p in traced) / metrics["pass_s"] - 1)
+                statistics.median(p["wall_s"] for p in traced) / statistics.median(plain) - 1)
             coverage = [q["covered"] for p in traced for q in layer_self_times(p)]
             extra["layer_coverage_min"] = min(coverage)
             metrics, units = {k: layers[k] for k in PER_LAYER}, PER_LAYER

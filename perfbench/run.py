@@ -30,16 +30,18 @@ CHECKPOINTS = os.path.join(ROOT, ".stream-checkpoints")
 TIME_LIMIT_S = 170
 
 
-def _stop_group(pgid: int) -> None:
-    """Kill every process left in the group and wait until none is left."""
+def _stop_group(proc: subprocess.Popen) -> None:
+    """Kill every process left in the group led by ``proc`` and wait until
+    none is left."""
     try:
-        os.killpg(pgid, signal.SIGKILL)
+        os.killpg(proc.pid, signal.SIGKILL)
     except ProcessLookupError:
         return
+    proc.wait()  # a member not yet reaped would keep the group alive
     deadline = time.monotonic() + 30
     while time.monotonic() < deadline:
         try:
-            os.killpg(pgid, 0)
+            os.killpg(proc.pid, 0)
         except ProcessLookupError:
             return
         time.sleep(0.1)
@@ -63,8 +65,7 @@ def main() -> int:
         except subprocess.TimeoutExpired:
             print(f"perfbench: no result within {TIME_LIMIT_S} s", file=sys.stderr)
         finally:
-            _stop_group(proc.pid)
-            proc.wait()
+            _stop_group(proc)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
         for path in (RUNS, None if had_checkpoints else CHECKPOINTS):

@@ -43,6 +43,15 @@ def test_metric_names_and_units_match_benchmark_json():
         assert NAME.match(name), name
 
 
+def test_inputs_are_the_fixed_testdata_copy():
+    from tests.oracle_harness import TABLES
+    data_dir = os.path.join(bench.TESTDATA, "sf0.01")
+    assert "0.01" in bench.scale_factors()
+    assert {f.removesuffix(".parquet") for f in os.listdir(data_dir)
+            if f.endswith(".parquet")} == set(TABLES)
+    bench.verify_testdata(data_dir)  # exits on any changed byte
+
+
 def test_tail_is_the_nearest_rank_quantile():
     assert bench.tail(list(range(1000))) == (899, 1000, 100)
     assert bench.tail([3.0, 1.0, 2.0]) == (3.0, 3, 0)
@@ -102,7 +111,7 @@ def test_planted_failure_is_counted_and_the_pass_goes_on(spark):
     assert [q["name"] for q in p["queries"]] == ["boom", "ok", "ok"]
     assert work.attempted == 3
     assert [name for name, _ in work.failures] == ["boom"]
-    metrics, extra = bench.end_to_end([1.0], {}, [p], 1.0)
+    metrics, extra = bench.end_to_end(1.0, {}, [p], [], 1.0)
     assert metrics["pass_s"] == p["wall_s"]
     # an oracle mismatch counts the same way
     work.check_pass(["ok"], lambda df, sql: {"ok": False, "detail": "planted"})

@@ -3,7 +3,7 @@
 ``DRIVEN`` are the workloads ``BENCHMARK.json`` lists; their lists are
 trimmed so that a run (set-up, output check and timed passes) stays near
 one minute on four cores. ``warehouse_reads`` is kept for runs by hand:
-a run of it takes about a minute and a half, which the benchmark's total
+a run of it takes over two minutes, which the benchmark's total
 time budget cannot hold next to the other two. README.md gives the
 reasons for each choice and the layer each workload loads.
 """
