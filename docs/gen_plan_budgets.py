@@ -26,10 +26,12 @@ INTENDED plan change) with: python docs/gen_plan_budgets.py
 """
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from zoom_etl_spark.registry import all_queries  # noqa: E402
 from zoom_etl_spark.session import get_spark  # noqa: E402
@@ -140,7 +142,7 @@ def main():
             budgets[name] = shuffle_profile(df._jdf)
         except Exception as e:  # noqa: BLE001 — generator reports, test enforces
             print(f"skip {name}: {type(e).__name__}", file=sys.stderr)
-    with open("/root/repo/docs/plan_budgets.json", "w") as f:
+    with open(os.path.join(ROOT, "docs", "plan_budgets.json"), "w") as f:
         json.dump({"budgets": budgets, "excluded": EXCLUDED},
                   f, indent=1, sort_keys=True)
     print(f"pinned {len(budgets)} queries, excluded {len(EXCLUDED)} "

@@ -1,5 +1,6 @@
-import sys, io, contextlib
-sys.path.insert(0, "/root/repo")
+import sys, io, contextlib, os
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from zoom_etl_spark.session import get_spark
 from zoom_etl_spark.registry import all_queries
 from zoom_etl_spark import plans
@@ -145,5 +146,5 @@ for name, fn, commentary in SECTIONS:
         df.explain("formatted")
     out.append(f"## {name}\n\n{commentary}\n\n```\n{buf.getvalue().strip()}\n```\n")
 
-open("/root/repo/docs/PLANS.md", "w").write("\n".join(out))
+open(os.path.join(ROOT, "docs", "PLANS.md"), "w").write("\n".join(out))
 print("written", sum(len(s) for s in out), "chars")

@@ -266,8 +266,9 @@ def test_stream_metrics_capture_watermark_drops(spark, sf_dir, tmp_path):
 
 def test_state_rows_plateau_at_keyspace(spark, sf_dir):
     """For the keyspace-bounded top-k IVM, per-batch state rows must
-    equal the group keyspace (|event_type|) and never grow past it —
-    the monitor's leak check on a healthy operator."""
+    equal the state keyspace (one row per (event_type, user_id) pair)
+    and never grow past it — the monitor's leak check on a healthy
+    operator."""
     import time
 
     from zoom_etl_spark.streaming.ingest import run_available_now
@@ -275,8 +276,8 @@ def test_state_rows_plateau_at_keyspace(spark, sf_dir):
     from zoom_etl_spark.streaming.stateful import topk_maintain
 
     from zoom_etl_spark.streaming.ingest import read_events_stream
-    n_types = table(spark, sf_dir, "events").select("event_type") \
-        .distinct().count()
+    n_pairs = table(spark, sf_dir, "events") \
+        .select("event_type", "user_id").distinct().count()
     with watched(spark) as m:
         out = topk_maintain(read_events_stream(spark, sf_dir))
         run_available_now(out, "t_state_rows", output_mode="update",
@@ -286,7 +287,7 @@ def test_state_rows_plateau_at_keyspace(spark, sf_dir):
             time.sleep(0.5)
     rows = state_rows(m, "t_state_rows")
     assert rows, "no progress captured"
-    assert max(rows) == n_types, (rows, n_types)
+    assert max(rows) == n_pairs, (rows, n_pairs)
 
 
 def test_shard_manifest_ivm_converges_and_localizes_membership(

@@ -1,16 +1,19 @@
-"""Custom stateful streaming (applyInPandasWithState) and the foreachBatch
-streaming-upsert sink — the complete Lambda-analog pipeline (SURVEY §3.2:
-stream → validate → stateful/windowed transform → idempotent keyed sink)."""
+"""Stateful streaming (JVM streaming aggregates and applyInPandasWithState
+state machines) and the foreachBatch streaming-upsert sink — the complete
+Lambda-analog pipeline (SURVEY §3.2: stream → validate →
+stateful/windowed transform → idempotent keyed sink)."""
 
 from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from zoom_etl_spark.catalog import table
 from zoom_etl_spark.operators.merge import merge_upsert
 from zoom_etl_spark.operators.windows import last_wins
+from zoom_etl_spark.streaming import stateful
 from zoom_etl_spark.streaming.ingest import read_events_stream
 from zoom_etl_spark.streaming.stateful import user_lifetime_stats
 
@@ -32,6 +35,18 @@ def test_stateful_user_stats_matches_batch(spark, sf_dir):
                 F.sum(F.floor(F.col("value") * 1000).cast("long"))
                  .alias("s")).collect()}
     assert got == want
+
+
+@pytest.mark.parametrize("op", ["user_lifetime_stats", "lastwins_maintain",
+                                "topk_maintain"])
+def test_keyed_aggregate_operators_keep_jvm_state(spark, sf_dir, op):
+    """Plain keyed aggregates keep their state in the JVM streaming
+    aggregate (StateStoreSave), never in a Python state machine."""
+    df = getattr(stateful, op)(read_events_stream(spark, sf_dir))
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple")
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
 
 
 def test_stream_stream_join(spark, sf_dir):
@@ -525,7 +540,6 @@ def test_bitemporal_ivm_out_of_order_raises(spark, sf_dir, tmp_path):
     """A batch delivering tx below a key's high-water mark must abort
     loudly (TransactionOrderError semantics), never record a corrupt
     belief history."""
-    import pytest
     from py4j.protocol import Py4JJavaError
 
     from zoom_etl_spark.streaming.ingest import run_available_now
@@ -591,10 +605,11 @@ def test_stateful_restart_resumes_state(spark, sf_dir):
     explicit checkpoint, then start a NEW query from the SAME checkpoint
     after more (strictly older) files land. File-source progress must
     resume (only the new file replays) and the per-key state must be
-    RESTORED: `_lastwins_update` re-emits the current winner for every
-    touched key, so with restored state the resumed drain emits the
-    phase-1 winners for keys whose newest event predates the restart —
-    lost state would emit the older tail events as winners instead."""
+    RESTORED: `lastwins_maintain` (update mode) re-emits the current
+    winner for every touched key, so with restored state the resumed
+    drain emits the phase-1 winners for keys whose newest event
+    predates the restart — lost state would emit the older tail events
+    as winners instead."""
     import tempfile
 
     from pyspark.sql.window import Window
@@ -764,8 +779,6 @@ def test_checkpoint_state_schema_upgrade(spark, sf_dir):
     rejected attempt (v1 still resumes from it), and the supported
     upgrade path — full replay into a FRESH checkpoint under v2 —
     converges to the batch answer."""
-    import pytest
-
     from zoom_etl_spark.streaming.ingest import EVENTS_SCHEMA
 
     e = table(spark, sf_dir, "events")

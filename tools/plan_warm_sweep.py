@@ -50,13 +50,15 @@ Check without rewriting:
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/docs")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "docs"))
 
 SF = "/root/testdata/sf0.001"
-OUT = "/root/repo/docs/plan_budgets_warm.json"
+OUT = os.path.join(ROOT, "docs", "plan_budgets_warm.json")
 
 # The cache-state-dependent family (gen_plan_budgets.py excludes these
 # from the cold golden with a reason pointing here).

@@ -1,12 +1,15 @@
-"""Custom stateful streaming operators (applyInPandasWithState) — the
-escape hatch when built-in windows/watermarks can't express the state
-machine (SURVEY §2.9; the engine analog of the reference's stateful
-watermark Variable, generalized to arbitrary per-key state).
+"""Stateful streaming operators (SURVEY §2.9; the engine analog of the
+reference's stateful watermark Variable, generalized to per-key state).
 
-Example operator: per-user lifetime counters (events seen, value sum,
-last event time) maintained across micro-batches. GroupStateTimeout is
-off — state lives for the stream's lifetime; production variants key
-eviction off event-time timeouts.
+Plain keyed aggregates are JVM streaming aggregates (``groupBy().agg()``
+in update mode, state in the native state store): per-user lifetime
+counters (``user_lifetime_stats``), the last-wins view
+(``lastwins_maintain``) and the top-k running sums (``topk_maintain``).
+``applyInPandasWithState`` is the escape hatch for the real state
+machines that built-in aggregates can't express: SCD2, retraction
+changelogs, prefix anomalies, bitemporal, CUSUM and funnels.
+GroupStateTimeout is off — state lives for the stream's lifetime;
+production variants key eviction off event-time timeouts.
 """
 
 from __future__ import annotations
@@ -16,51 +19,25 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
-OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType(), True),
-    StructField("n_events", LongType(), True),
-    StructField("value_milli", LongType(), True),  # Σ floor(value·1000): exact
-    StructField("last_ts", TimestampType(), True),
-])
-
-STATE_SCHEMA = StructType([
-    StructField("n_events", LongType(), True),
-    StructField("value_milli", LongType(), True),
-    StructField("last_ts_us", LongType(), True),  # state can't hold timestamps
-])
-
-
-def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    # the running sum lives on the exact 1e-3 integer grid, so the
-    # converged state is batch-split- and order-invariant — which is what
-    # lets this operator carry a full value-hash oracle gate
-    n, vmilli, last_us = state.get if state.exists else (0, 0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        vmilli += int(np.floor(pdf["value"].to_numpy() * 1000)
-                      .astype(np.int64).sum())
-        if len(pdf):
-            last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-    state.update((n, vmilli, last_us))
-    yield pd.DataFrame({
-        "user_id": [key[0]],
-        "n_events": [n],
-        "value_milli": [vmilli],
-        "last_ts": [pd.Timestamp(last_us * 1000)],
-    })
-
 
 def user_lifetime_stats(events_stream: DataFrame) -> DataFrame:
-    """Per-user running totals as a stateful stream (update output mode)."""
+    """Per-user running totals as a JVM streaming aggregate (update
+    output mode): each batch re-emits every touched user's (count,
+    Σ floor(value·1000), max ts), so per user the emissions grow
+    strictly in n_events. The sum lives on the exact 1e-3 integer grid,
+    so the converged state is batch-split- and order-invariant."""
     return (events_stream
             .groupBy("user_id")
-            .applyInPandasWithState(_update, OUTPUT_SCHEMA, STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+            .agg(F.count("*").alias("n_events"),
+                 F.sum(F.floor(F.col("value") * 1000).cast("long"))
+                  .alias("value_milli"),
+                 F.max("ts").alias("last_ts")))
 
 
 # ---------------------------------------------------------------- SCD2 IVM
@@ -172,7 +149,6 @@ def scd2_finalize(emitted: DataFrame) -> DataFrame:
     is permanently not-current. So the converged row is one groupBy:
     min(valid_to) (nulls ignored — all-open stays NULL) + AND(is_current).
     A single keyed aggregation — cheaper than the former window top-1."""
-    from pyspark.sql import functions as F
     return (emitted.groupBy("user_id", "event_id")
             .agg(F.any_value("state").alias("state"),
                  F.min("valid_from").alias("valid_from"),
@@ -182,38 +158,6 @@ def scd2_finalize(emitted: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------------- last-wins IVM
 
-LASTWINS_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType(), True),
-    StructField("event_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("value", DoubleType(), True),
-])
-
-LASTWINS_STATE_SCHEMA = StructType([
-    StructField("ts_us", LongType(), True),
-    StructField("event_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-])
-
-
-def _lastwins_update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    cur = state.get if state.exists else None
-    for pdf in pdfs:
-        for r in pdf.itertuples():
-            cand = (int(r.ts.value // 1000), int(r.event_id),
-                    str(r.event_type), float(r.value))
-            if cur is None or (cand[0], cand[1]) > (cur[0], cur[1]):
-                cur = cand
-    if cur is None:
-        return
-    state.update(cur)
-    yield pd.DataFrame({
-        "user_id": [key[0]], "event_id": [cur[1]], "event_type": [cur[2]],
-        "ts": [pd.Timestamp(cur[0] * 1000)], "value": [cur[3]]})
-
-
 def lastwins_maintain(events_stream: DataFrame) -> DataFrame:
     """Continuously-maintained last-wins view (ROADMAP item 5): per key,
     the payload of the latest (ts, event_id) — the streaming IVM analog
@@ -222,15 +166,16 @@ def lastwins_maintain(events_stream: DataFrame) -> DataFrame:
     ref handler.py:60-74).
 
     Unlike the SCD2 operator this one is fully OUT-OF-ORDER TOLERANT
-    across micro-batches: state keeps only the max (ts, event_id) pair
-    seen, so a late replay can never regress the view, and redelivered
-    duplicates are no-ops. State is one fixed-width row per key —
-    bounded by key cardinality, independent of stream length."""
+    across micro-batches: a JVM streaming aggregate keeps only the max
+    (ts, event_id, …) struct seen, so a late replay can never regress the
+    view, and redelivered duplicates are no-ops. State is one row per
+    key — bounded by key cardinality, independent of stream length."""
     return (events_stream
             .groupBy("user_id")
-            .applyInPandasWithState(_lastwins_update, LASTWINS_OUTPUT_SCHEMA,
-                                    LASTWINS_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
+            .agg(F.max(F.struct("ts", "event_id", "event_type", "value"))
+                  .alias("w"))
+            .select("user_id", "w.event_id", "w.event_type", "w.ts",
+                    "w.value"))
 
 
 RETRACT_OUTPUT_SCHEMA = StructType([
@@ -296,7 +241,6 @@ def changelog_fold(emitted: DataFrame) -> DataFrame:
     any) carries a LOWER version by construction, so a plain version-max
     top-1 suffices and the fold never needs the op column ordering."""
     from ..operators.windows import topk_per_group
-    from pyspark.sql import functions as F
     adds = emitted.filter(F.col("op") != "-U")
     return topk_per_group(adds, keys=["user_id"],
                           order=[F.col("version").desc()], k=1)
@@ -306,7 +250,6 @@ def lastwins_finalize(emitted: DataFrame) -> DataFrame:
     """Collapse the update log to the converged view: per-key emissions
     are monotone in (ts, event_id), so the latest emission is the max."""
     from ..operators.windows import topk_per_group
-    from pyspark.sql import functions as F
     return topk_per_group(
         emitted, keys=["user_id"],
         order=[F.col("ts").desc(), F.col("event_id").desc()], k=1)
@@ -370,78 +313,36 @@ def anomaly_maintain(events_stream: DataFrame) -> DataFrame:
 
 # --------------------------------------------------------------- top-k IVM
 
-TOPK_OUTPUT_SCHEMA = StructType([
-    StructField("event_type", StringType(), True),
-    StructField("rnk", LongType(), True),
-    StructField("user_id", LongType(), True),
-    StructField("total_milli", LongType(), True),
-    StructField("seq", LongType(), True),
-])
-
-TOPK_STATE_SCHEMA = StructType([
-    StructField("user_ids", ArrayType(LongType()), True),
-    StructField("sums", ArrayType(LongType()), True),
-    StructField("seq", LongType(), True),
-])
-
 TOPK_K = 10
 
 
-def _topk_update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    """Maintain per-group user totals (exact 1e-3-grid integers) and
-    re-emit the current top-10 after each batch, stamped with a per-key
-    emission sequence so the converged view is 'rows of the max seq'."""
-    if state.exists:
-        uids, sums, seq = state.get
-        acc = dict(zip(uids, sums))
-    else:
-        acc, seq = {}, 0
-    for pdf in pdfs:
-        v = np.floor(pdf["value"].to_numpy() * 1000).astype(np.int64)
-        for u, vm in zip(pdf["user_id"].to_numpy(), v):
-            u = int(u)
-            acc[u] = acc.get(u, 0) + int(vm)
-    if not acc:
-        return
-    seq = int(seq) + 1
-    state.update((list(acc.keys()), list(acc.values()), seq))
-    top = sorted(acc.items(), key=lambda kv: (-kv[1], kv[0]))[:TOPK_K]
-    yield pd.DataFrame({
-        "event_type": [key[0]] * len(top),
-        "rnk": np.arange(1, len(top) + 1, dtype=np.int64),
-        "user_id": np.array([u for u, _ in top], dtype=np.int64),
-        "total_milli": np.array([s for _, s in top], dtype=np.int64),
-        "seq": np.full(len(top), seq, dtype=np.int64),
-    })
-
-
 def topk_maintain(events_stream: DataFrame) -> DataFrame:
-    """Continuously-maintained exact top-10 users by running value sum,
-    per event type — the leaderboard IVM (Materialize/Flink `ORDER BY …
-    LIMIT k` maintenance). State = the per-group user→sum arrangement:
-    exact top-k over an unbounded stream REQUIRES the full group
-    (a bounded sketch like SpaceSaving can only approximate), so state
-    is keyspace-sized per group — the documented cost of exactness, same
-    as any top-k arrangement in a streaming materializer. Updates are
-    additive integer sums, hence fully out-of-order tolerant and
-    redelivery-commutative across micro-batches."""
+    """Continuously-maintained per-(event_type, user) running value sums
+    behind the exact top-10 leaderboard — the `ORDER BY … LIMIT k` view
+    a streaming materializer keeps hot. A JVM streaming aggregate: state
+    is one row per (event_type, user_id), so no key holds a whole
+    group's keyspace. Sums are exact 1e-3-grid integers, hence out-of-
+    order tolerant across micro-batches; ``n`` grows with every emission
+    of a key, which orders the update log for ``topk_finalize``."""
     return (events_stream
-            .groupBy("event_type")
-            .applyInPandasWithState(_topk_update, TOPK_OUTPUT_SCHEMA,
-                                    TOPK_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
+            .groupBy("event_type", "user_id")
+            .agg(F.sum(F.floor(F.col("value") * 1000).cast("long"))
+                  .alias("total_milli"),
+                 F.count("*").alias("n")))
 
 
 def topk_finalize(emitted: DataFrame) -> DataFrame:
-    """Converged leaderboard from the update log: per event_type keep the
-    rows of the LAST emission (max seq) — each emission is a complete
-    top-10 snapshot, so no cross-emission merging is needed."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    w = Window.partitionBy("event_type")
-    return (emitted.withColumn("_mx", F.max("seq").over(w))
-                   .filter(F.col("seq") == F.col("_mx"))
-                   .drop("_mx", "seq"))
+    """Converged leaderboard from the update log: per (event_type,
+    user_id) the LAST emission (max ``n``) holds the converged sum; rank
+    those per event_type and keep the top ``TOPK_K``."""
+    from ..operators.windows import topk_per_group
+    conv = (emitted.groupBy("event_type", "user_id")
+            .agg(F.max_by("total_milli", "n").alias("total_milli")))
+    return topk_per_group(
+        conv, keys=["event_type"],
+        order=[F.col("total_milli").desc(), F.col("user_id")],
+        k=TOPK_K, rank_col="rnk", keep_rank=True).select(
+            "event_type", "rnk", "user_id", "total_milli")
 
 
 # --------------------------------------------------------- bitemporal IVM
@@ -636,7 +537,6 @@ def bitemporal_finalize(emitted: DataFrame) -> DataFrame:
     final snapshot seq (earlier previews were superseded by a late
     arrival re-running the buffered tail)."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
     closed = emitted.filter(F.col("op") == "C").drop("op", "seq")
     w = Window.partitionBy("user_id")
     last = (emitted.filter(F.col("op") != "C")
@@ -776,6 +676,5 @@ def funnel_maintain(events_stream: DataFrame) -> DataFrame:
 def funnel_finalize(emitted: DataFrame) -> DataFrame:
     """Converged per-user funnel stage: the max-seq emission per key."""
     from ..operators.windows import topk_per_group
-    from pyspark.sql import functions as F
     return topk_per_group(emitted, keys=["user_id"],
                           order=[F.col("seq").desc()], k=1)

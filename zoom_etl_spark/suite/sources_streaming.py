@@ -92,20 +92,20 @@ SELECT user_id,
 FROM events GROUP BY 1
 """)
 def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op (applyInPandasWithState): per-user
-    lifetime counters maintained across micro-batches — the arbitrary-
-    state generalization of the reference's watermark Variable. Upgraded
-    from rows-only to a FULL value-hash gate by moving the running sum
-    onto the exact 1e-3 integer grid (batch-split- and order-invariant,
-    the stream_anomaly_ivm precedent); the drained update log converges
-    to the batch groupBy, emission-monotone in (n_events, last_ts)."""
+    """Stateful streaming op: per-user lifetime counters maintained
+    across micro-batches as a JVM streaming aggregate (update mode) —
+    the keyed-state generalization of the reference's watermark
+    Variable. The running sum lives on the exact 1e-3 integer grid
+    (batch-split- and order-invariant, the stream_anomaly_ivm
+    precedent), so the drained update log converges to the batch
+    groupBy under a full value-hash gate; emissions are monotone in
+    (n_events, last_ts), so the last one per user is the converged row."""
     from ..operators.windows import topk_per_group
     from ..streaming.stateful import user_lifetime_stats
     stream = read_events_stream(spark, sf_dir)
     out = user_lifetime_stats(stream)
     run_available_now(out, "stream_stateful_result", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+                        n_state_partitions=replay_state_partitions(spark))
     log = spark.table("stream_stateful_result")
     return topk_per_group(log, keys=["user_id"],
                           order=[F.col("n_events").desc(),
@@ -257,16 +257,15 @@ SELECT user_id, event_id, event_type, ts, value FROM (
 WHERE rn = 1
 """)
 def stream_lastwins_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incrementally-maintained last-wins view: state = one fixed-width
-    row per key (the max (ts, event_id) payload), out-of-order and
-    redelivery tolerant. Converged state is oracle-checked against the
+    """Incrementally-maintained last-wins view: state = one row per key
+    (the max (ts, event_id, …) struct of a JVM streaming aggregate),
+    out-of-order and redelivery tolerant. Converged state is oracle-checked against the
     batch row_number()=1 formulation — full value-hash gate."""
     from ..streaming.stateful import lastwins_finalize, lastwins_maintain
     stream = read_events_stream(spark, sf_dir)
     out = lastwins_maintain(stream)
     run_available_now(out, "stream_lastwins_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+                        n_state_partitions=replay_state_partitions(spark))
     return lastwins_finalize(spark.table("stream_lastwins_log")).select(
         "user_id", "event_id", "event_type", "ts", "value")
 
@@ -847,20 +846,18 @@ SELECT event_type, rnk, user_id, total_milli FROM r WHERE rnk <= 10
 def stream_topk_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuously-maintained exact top-10 leaderboard (users by running
     value sum, per event type) — the `ORDER BY … LIMIT k` view a
-    streaming materializer keeps hot. State = the full per-group
-    user→sum arrangement (exactness over an unbounded stream requires
-    it; a bounded sketch could only approximate), updated additively in
-    exact 1e-3-grid integers, so the operator is out-of-order tolerant
-    and redelivery-commutative and the drained view value-hash-matches
-    the batch groupBy+rank oracle. Each batch re-emits a complete
-    sequenced top-10 snapshot; the converged view is the last snapshot
-    per group."""
+    streaming materializer keeps hot. The maintained state is a JVM
+    streaming aggregate with one row per (event_type, user_id), updated
+    additively in exact 1e-3-grid integers, so the operator is
+    out-of-order tolerant and the drained view value-hash-matches the
+    batch groupBy+rank oracle. Each batch re-emits the touched pairs
+    with a growing per-pair count; the finalize keeps each pair's last
+    emission and ranks the top-10 per event type."""
     from ..streaming.stateful import topk_finalize, topk_maintain
     stream = read_events_stream(spark, sf_dir)
     out = topk_maintain(stream)
     run_available_now(out, "stream_topk_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+                      n_state_partitions=replay_state_partitions(spark))
     return topk_finalize(spark.table("stream_topk_log"))
 
 
