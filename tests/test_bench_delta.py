@@ -9,9 +9,12 @@ import importlib.util
 import json
 import subprocess
 import sys
+from pathlib import Path
 
-_spec = importlib.util.spec_from_file_location(
-    "bench_delta", "/root/repo/tools/bench_delta.py")
+REPO = Path(__file__).resolve().parent.parent
+BENCH_DELTA = str(REPO / "tools" / "bench_delta.py")
+
+_spec = importlib.util.spec_from_file_location("bench_delta", BENCH_DELTA)
 bench_delta = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(bench_delta)
 
@@ -25,7 +28,7 @@ def _write(tmp_path, name, queries):
 
 def _run(tmp_path, cur, prevs, factor=None, replans=None, strict=False):
     out = str(tmp_path / "delta.json")
-    cmd = [sys.executable, "/root/repo/tools/bench_delta.py",
+    cmd = [sys.executable, BENCH_DELTA,
            "--current", cur, "--prev", *prevs, "--out", out,
            # tests run on tmp files; the strict gate has its own test
            "--replans", replans or str(tmp_path / "no_replans.json")]
@@ -141,17 +144,18 @@ def test_uncommitted_prior_rejected(tmp_path):
     assert d.get("uncommitted") == [a]
 
 
-def test_committed_prior_accepted():
+def test_committed_prior_accepted(tmp_path):
     """A git-tracked repo artifact passes the strict gate (the normal
     round protocol path). Compared against itself at a huge factor —
     nothing can flag; the exit code is the committed-check verdict."""
-    prior = "/root/repo/BENCH_local_r08a.json"
-    cmd = [sys.executable, "/root/repo/tools/bench_delta.py",
+    prior = str(REPO / "BENCH_local_r08a.json")
+    out = str(tmp_path / "delta.json")
+    cmd = [sys.executable, BENCH_DELTA,
            "--current", prior, "--prev", prior,
-           "--out", "/tmp/test_bd_committed.json", "--factor", "1000"]
+           "--out", out, "--factor", "1000"]
     r = subprocess.run(cmd, capture_output=True, text=True)
     assert r.returncode in (0, 1), r.stdout  # 1 only if artifact has
-    d = json.load(open("/tmp/test_bd_committed.json"))  # errored rows
+    d = json.load(open(out))  # errored rows
     assert d["flagged"] == {}
 
 
@@ -223,7 +227,7 @@ def test_rev_path_prior_accepted_and_loaded():
     prior survives the working-tree file being overwritten (the
     round-9 self-prior fix)."""
     assert bench_delta.is_rev_path("HEAD:BENCH_full.json")
-    assert not bench_delta.is_rev_path("/root/repo/BENCH_full.json")
+    assert not bench_delta.is_rev_path(str(REPO / "BENCH_full.json"))
     assert not bench_delta.is_rev_path("docs/replans.json")
     assert bench_delta.is_committed("HEAD:BENCH_full.json")
     d = bench_delta.load_json_prior("HEAD:BENCH_full.json")
@@ -235,15 +239,18 @@ def test_dirty_tracked_prior_rejected(tmp_path, monkeypatch):
     its content is as unrecoverable as a /tmp file. (Simulated via the
     porcelain call so no real tracked file is dirtied.)"""
     real_run = bench_delta.subprocess.run
+    asked = []
 
     def fake_run(cmd, **kw):
         if cmd[:2] == ["git", "status"]:
+            asked.append(cmd)
             return type("R", (), {"returncode": 0,
                                   "stdout": " M BENCH_full.json\n"})()
         return real_run(cmd, **kw)
 
     monkeypatch.setattr(bench_delta.subprocess, "run", fake_run)
-    assert not bench_delta.is_committed("/root/repo/BENCH_full.json")
+    assert not bench_delta.is_committed(str(REPO / "BENCH_full.json"))
+    assert asked, "rejected before the porcelain check was reached"
 
 
 def test_norm_ts_handles_offsets():

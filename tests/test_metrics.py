@@ -12,8 +12,11 @@ from __future__ import annotations
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 from zoom_etl_spark.metrics import StageMetrics, mb
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_metrics_disabled_graceful(spark):
@@ -29,8 +32,6 @@ def test_mb_rounding():
 
 def test_metrics_attribute_shuffle_bytes():
     script = textwrap.dedent("""
-        import sys
-        sys.path.insert(0, "/root/repo")
         from zoom_etl_spark.session import get_spark
         from zoom_etl_spark.metrics import StageMetrics
         spark = get_spark("metrics-smoke", cpus="2", ui=True)
@@ -49,6 +50,7 @@ def test_metrics_attribute_shuffle_bytes():
         print("METRICS_OK")
         spark.stop()
     """)
-    proc = subprocess.run([sys.executable, "-c", script],
+    # `python -c` puts its cwd first on sys.path: run it from the checkout
+    proc = subprocess.run([sys.executable, "-c", script], cwd=REPO,
                           capture_output=True, text=True, timeout=180)
     assert "METRICS_OK" in proc.stdout, proc.stderr[-2000:]

@@ -163,8 +163,7 @@ def test_live_stream_reports_state_memory(spark, sf_dir):
     agg = (stream.withWatermark("ts", "1 hour")
                  .groupBy(F.window("ts", "24 hours")).count())
     with watched(spark) as m:
-        run_available_now(agg, "t_alert_mem", output_mode="update",
-                          n_state_partitions=8)
+        run_available_now(agg, "t_alert_mem", output_mode="update")
         deadline = time.time() + 15
         while time.time() < deadline and not any(state_bytes(m, "t_alert_mem")):
             time.sleep(0.5)

@@ -44,13 +44,44 @@ def test_paginated_source_retries_transient_errors(spark):
 def test_streaming_matches_batch(spark, sf_dir):
     """availableNow drain of the events stream must equal the batch
     tumbling-window aggregate (same code path, SURVEY ST5)."""
-    stream_out = run_available_now(
+    run_available_now(
         windowed_counts(read_events_stream(spark, sf_dir)), "t_stream_batch_eq")
+    stream_out = spark.table("t_stream_batch_eq")
     e = table(spark, sf_dir, "events")
     batch = (e.groupBy(F.window("ts", "1 day").alias("w"))
              .agg(F.count("*").alias("cnt"), F.round(F.sum("value"), 3).alias("total"))
              .select(F.col("w.start").alias("day"), "cnt", "total"))
     assert {tuple(r) for r in stream_out.collect()} == {tuple(r) for r in batch.collect()}
+
+
+@pytest.mark.parametrize("builder,want", [
+    ("stream_scd2_ivm", 16),            # applyInPandasWithState
+    ("stream_drift_ivm", 8),            # built-in aggregate
+    ("stream_shard_manifest_ivm", 8),   # built-in aggregate
+    ("stream_static_enrich", 8),        # stateless projection
+])
+def test_drain_sizing_follows_plan(spark, sf_dir, monkeypatch, builder,
+                                   want):
+    """Each builder's drained frame gets its state-store count from its
+    own plan: Python state caps at 16, JVM or no state at 8 — read at a
+    parallelism of 32 so both caps bind."""
+    from pyspark import SparkContext
+
+    from zoom_etl_spark.streaming.ingest import replay_state_partitions
+    from zoom_etl_spark.suite import sources_streaming
+
+    class Drained(Exception):
+        pass
+
+    def capture(result, *args, **kwargs):
+        raise Drained(replay_state_partitions(result))
+
+    monkeypatch.setattr(SparkContext, "defaultParallelism",
+                        property(lambda self: 32))
+    monkeypatch.setattr(sources_streaming, "run_available_now", capture)
+    with pytest.raises(Drained) as got:
+        getattr(sources_streaming, builder)(spark, sf_dir)
+    assert got.value.args[0] == want
 
 
 def test_multimodal_decode_fake_and_stub(spark, sf_dir):
@@ -280,8 +311,7 @@ def test_state_rows_plateau_at_keyspace(spark, sf_dir):
         .select("event_type", "user_id").distinct().count()
     with watched(spark) as m:
         out = topk_maintain(read_events_stream(spark, sf_dir))
-        run_available_now(out, "t_state_rows", output_mode="update",
-                          n_state_partitions=8)
+        run_available_now(out, "t_state_rows", output_mode="update")
         deadline = time.time() + 15
         while time.time() < deadline and not state_rows(m, "t_state_rows"):
             time.sleep(0.5)

@@ -401,8 +401,7 @@ def test_anomaly_ivm_planted_outlier(spark, tmp_path):
      .write.parquet(f"{src}/events.parquet"))
     stream = read_events_stream(spark, src)
     out = anomaly_maintain(stream)
-    run_available_now(out, "anom_planted_log", output_mode="append",
-                      n_state_partitions=4)
+    run_available_now(out, "anom_planted_log", output_mode="append")
     got = {(r.user_id, r.event_id): r.is_anom
            for r in spark.table("anom_planted_log").collect()}
     flagged = {k for k, v in got.items() if v}
@@ -456,19 +455,23 @@ def test_topk_ivm_rocksdb_state_store(spark, sf_dir):
     converged leaderboard under the RocksDB state-store provider (the
     disk-backed state path a 100 TB keyspace requires) as under the
     default heap-backed provider."""
+    from contextlib import nullcontext
+
     from zoom_etl_spark.streaming.ingest import (read_events_stream,
+                                                 rocksdb_state,
                                                  run_available_now)
     from zoom_etl_spark.streaming.stateful import (topk_finalize,
                                                    topk_maintain)
 
-    def drain(name, rocksdb):
+    def drain(name, provider):
         out = topk_maintain(read_events_stream(spark, sf_dir))
-        run_available_now(out, name, output_mode="update",
-                          n_state_partitions=8, rocksdb=rocksdb)
+        with provider:
+            run_available_now(out, name, output_mode="update")
         return {(r.event_type, r.rnk, r.user_id, r.total_milli)
                 for r in topk_finalize(spark.table(name)).collect()}
 
-    assert drain("t_topk_rocks", True) == drain("t_topk_heap", False)
+    assert drain("t_topk_rocks", rocksdb_state(spark)) == \
+        drain("t_topk_heap", nullcontext())
     # provider config must be restored after the scoped drain
     assert spark.conf.get(
         "spark.sql.streaming.stateStore.providerClass",
@@ -518,7 +521,7 @@ def test_bitemporal_ivm_multibatch_matches_batch(spark, sf_dir, tmp_path):
         F.floor(F.col("value") * 1000).cast("long").alias("value"),
         F.col("event_id").alias("tx"))
     run_available_now(bitemporal_maintain(assertions), "t_bt_mb",
-                      output_mode="update", n_state_partitions=8)
+                      output_mode="update")
     got = {tuple(r) for r in
            bitemporal_finalize(spark.table("t_bt_mb")).collect()}
 
@@ -553,7 +556,7 @@ def test_bitemporal_ivm_out_of_order_raises(spark, sf_dir, tmp_path):
         F.col("event_id").alias("tx"))
     with pytest.raises((Py4JJavaError, Exception)) as ei:
         run_available_now(bitemporal_maintain(assertions), "t_bt_ooo",
-                          output_mode="update", n_state_partitions=8)
+                          output_mode="update")
     assert "TransactionOrderError" in str(ei.value) \
         or "high-water" in str(ei.value)
 
@@ -583,7 +586,7 @@ def test_bitemporal_ivm_out_of_order_converges_with_lateness(
     # lateness up to mx - mx/3 - 1; anything smaller must raise instead
     run_available_now(
         bitemporal_maintain(assertions, tx_lateness=2 * mx // 3 + 2),
-        "t_bt_late", output_mode="update", n_state_partitions=8)
+        "t_bt_late", output_mode="update")
     got = {tuple(r) for r in
            bitemporal_finalize(spark.table("t_bt_late"))
            .select("user_id", "value", "valid_from", "valid_to",
@@ -852,8 +855,7 @@ def test_cusum_ivm_inorder_multibatch_matches_single_batch(spark, sf_dir):
                "signup": 1000, "error": 1000}
     # single-batch reference
     ref_out = cusum_maintain(read_events_stream(spark, sf_dir), targets)
-    run_available_now(ref_out, "cusum_ref_log", output_mode="append",
-                      n_state_partitions=4)
+    run_available_now(ref_out, "cusum_ref_log", output_mode="append")
     ref = {(r.event_type, r.event_id): (r.cusum_hi, r.cusum_lo,
                                         r.alarm_hi, r.alarm_lo)
            for r in spark.table("cusum_ref_log").collect()}
@@ -902,8 +904,7 @@ def test_cusum_ivm_planted_drift_alarms(spark, tmp_path):
     (spark.createDataFrame(pdf).coalesce(1)
      .write.parquet(f"{src}/events.parquet"))
     out = cusum_maintain(read_events_stream(spark, src), {"view": 100})
-    run_available_now(out, "cusum_drift_log", output_mode="append",
-                      n_state_partitions=4)
+    run_available_now(out, "cusum_drift_log", output_mode="append")
     got = sorted(spark.table("cusum_drift_log").collect(),
                  key=lambda r: r.event_id)
     # mu=100, k=5, h=50; in-control: v-mu-k = -5 -> S+ pinned at 0

@@ -49,7 +49,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FACTORS = {10: "/tmp/zes_sf1", 100: "/tmp/zes_x100"}
 
@@ -151,7 +151,8 @@ def profile_once_filesink(spark, name: str, sf_dir: str) -> dict:
     import pyspark.sql.functions as F
 
     from zoom_etl_spark.streaming.ingest import (
-        drain_checkpoint, read_events_stream, state_partitions)
+        drain_checkpoint, read_events_stream, replay_state_partitions,
+        state_partitions)
 
     if name != "stream_windowed_agg_ivm":
         raise SystemExit(f"--sink file supports only "
@@ -170,7 +171,7 @@ def profile_once_filesink(spark, name: str, sf_dir: str) -> dict:
                 F.round(F.sum(F.col("value").cast("decimal(18,3)")), 3)
                 .cast("double").alias("total")))
     out = agg.select("user_id", F.col("w.start").alias("h"), "cnt", "total")
-    with state_partitions(spark, 16), \
+    with state_partitions(spark, replay_state_partitions(out)), \
             drain_checkpoint("fsink_winagg") as ckpt:
         q = (out.writeStream
              .foreachBatch(lambda df, _bid:

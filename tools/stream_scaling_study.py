@@ -25,7 +25,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 QUERIES = ("stream_shard_manifest_ivm", "stream_windowed_agg_ivm",
            "stream_cusum_ivm")
@@ -77,7 +78,7 @@ def main() -> None:
         r = subprocess.run(
             [sys.executable, os.path.abspath(__file__),
              "--factor-dir", path, "--runs", str(args.runs)],
-            capture_output=True, text=True, env=env, cwd="/root/repo",
+            capture_output=True, text=True, env=env, cwd=REPO,
             timeout=3600)
         line = next(ln for ln in r.stdout.splitlines()
                     if ln.startswith("STUDY_RESULT "))

@@ -14,12 +14,14 @@ the `readStream.format(...)` line.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
@@ -99,23 +101,21 @@ def windowed_counts(stream: DataFrame, watermark: str = "1 hour",
 
 
 @contextmanager
-def state_partitions(spark: SparkSession, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` for a STATEFUL streaming
-    query. The setting fixes the number of STATE STORE instances (one per
-    shuffle partition, pinned at the first micro-batch and persisted in
-    the checkpoint) — a per-workload sizing decision, not cluster width:
-    it must cover the keyspace/throughput of the stateful operator, and
-    every instance carries fixed maintenance cost (snapshots, file
-    handles) even when near-empty. The bounded availableNow replays here
-    need single digits; a 100 TB deployment raises ``n`` to its expected
-    peak parallelism BEFORE first start (it cannot change across
-    restarts without a new checkpoint).
+def state_partitions(spark: SparkSession, n: int):
+    """Scope ``spark.sql.shuffle.partitions`` for a streaming query about
+    to start. The setting fixes the number of STATE STORE instances (one
+    per shuffle partition, pinned at the first micro-batch and persisted
+    in the checkpoint) — a per-workload sizing decision, not cluster
+    width: it must cover the keyspace/throughput of the stateful
+    operator, and every instance carries fixed maintenance cost
+    (snapshots, file handles) even when near-empty. A 100 TB deployment
+    sizes ``n`` to its expected peak parallelism BEFORE first start (it
+    cannot change across restarts without a new checkpoint).
 
     NOT concurrency-safe: ``spark.sql.shuffle.partitions`` is session-
     global, so anything else planned on this session while the context is
-    open inherits ``n``. Use single-query-at-a-time (the round-2 ADVICE
-    fix makes the override opt-in per call rather than silently applied
-    to every streaming drain)."""
+    open inherits ``n``. Use single-query-at-a-time; the bounded replays
+    get it scoped by :func:`run_available_now`."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -129,37 +129,42 @@ def state_partitions(spark: SparkSession, n: int = 8):
 # gets slower. They are REPLAY sizing knobs, not cluster constants — a
 # production stream sizes its state-store instance count to expected
 # peak stateful parallelism BEFORE first start (see state_partitions).
-_REPLAY_JVM_STATE_FLOOR = 8      # windowed agg / dedup / stream-stream join
-_REPLAY_PYTHON_STATE_CAP = 16    # applyInPandasWithState drains
+_REPLAY_JVM_STATE_FLOOR = 8      # JVM state, or no state at all
+_REPLAY_PYTHON_STATE_CAP = 16    # Python state operators
+
+# Python state operators as the analyzed plan names them:
+# applyInPandasWithState and transformWithStateInPandas (Spark 4.0
+# TransformWithStateInPandas, TransformWithStateInPySpark since 4.1).
+_PYTHON_STATE_NODE = re.compile(
+    r"FlatMapGroupsInPandasWithState|TransformWithStateInP(?:andas|ySpark)")
 
 
-def replay_state_partitions(spark: SparkSession,
-                            python_stateful: bool = False) -> int:
-    """State-store instance count for a BOUNDED availableNow replay,
-    derived from the session's parallelism instead of a per-query
-    literal (the round-9 verdict: bench-scale sizing must not live in
-    query bodies as constants). Two measured regimes:
+def replay_state_partitions(result: DataFrame) -> int:
+    """State-store instance count for a BOUNDED availableNow replay of
+    the streaming frame ``result``, derived from its own analyzed plan
+    and the session's parallelism. Two measured regimes:
 
-    - **JVM-stateful** drains (windowed aggregates,
-      dropDuplicatesWithinWatermark, stream-stream joins): a bounded
-      replay's cost is per-instance maintenance — every store instance
-      pays snapshot/commit bookkeeping per micro-batch while holding a
-      handful of keys (a symmetric-hash join keeps FOUR stores per
-      partition). The r9 probe matrix measured the floor at 8
-      (stream_stream_join 7.75 s @16 → 3.47 s @8; 2.90 s @4 is inside
+    - **JVM-stateful** drains (built-in aggregates,
+      dropDuplicatesWithinWatermark, stream-stream joins) and stateless
+      ones: a bounded replay's cost is per-instance maintenance — every
+      store instance pays snapshot/commit bookkeeping per micro-batch
+      while holding a handful of keys (a symmetric-hash join keeps FOUR
+      stores per partition). The r9 probe matrix measured the floor at
+      8 (stream_stream_join 7.75 s @16 → 3.47 s @8; 2.90 s @4 is inside
       noise and below the stream_ingest precedent), so: min(par, 8).
-    - **python-stateful** drains (``applyInPandasWithState``): cost is
-      the per-batch Python worker round-trips, and cutting instances
-      below worker parallelism CONCENTRATES Python work
+    - **python-stateful** drains (a Python state operator in the plan):
+      cost is the per-batch Python worker round-trips, and cutting
+      instances below worker parallelism CONCENTRATES Python work
       (stream_bitemporal_late 15.9 s @4 vs 11.8 s @16), so: width =
       parallelism capped at the measured plateau 16.
 
     Both clamp to the session's defaultParallelism — instances beyond
     cores only add maintenance, never concurrency, on a replay."""
-    par = spark.sparkContext.defaultParallelism
-    if python_stateful:
-        return max(1, min(par, _REPLAY_PYTHON_STATE_CAP))
-    return max(1, min(par, _REPLAY_JVM_STATE_FLOOR))
+    par = result.sparkSession.sparkContext.defaultParallelism
+    plan = result._jdf.queryExecution().analyzed().toString()
+    cap = (_REPLAY_PYTHON_STATE_CAP if _PYTHON_STATE_NODE.search(plan)
+           else _REPLAY_JVM_STATE_FLOOR)
+    return max(1, min(par, cap))
 
 
 _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
@@ -218,28 +223,21 @@ def rocksdb_state(spark: SparkSession):
 
 
 def run_available_now(result: DataFrame, query_name: str,
-                      output_mode: str = "complete",
-                      n_state_partitions: int | None = None,
-                      rocksdb: bool = False) -> DataFrame:
-    """Drain all available input into an in-memory sink; return the result
-    table. Complete mode: windows re-emit as late batches arrive.
+                      output_mode: str = "complete") -> StreamingQuery:
+    """Drain all available input of ``result`` into the in-memory table
+    ``query_name`` and return the finished query (its
+    ``recentProgress`` holds every micro-batch). Complete mode: windows
+    re-emit as late batches arrive.
 
-    ``n_state_partitions``: opt-in state-store sizing for STATEFUL
-    queries (see :func:`state_partitions`, including its concurrency
-    caveat). Default None touches no session config — a plain drain
-    inherits whatever parallelism the session already has.
-    ``rocksdb``: opt-in disk-backed state (see :func:`rocksdb_state`)
-    for arrangement-sized stateful operators."""
-    from contextlib import ExitStack
+    The drain runs under :func:`state_partitions` scoped to
+    :func:`replay_state_partitions` of ``result`` — the sizing follows
+    the plan, so no caller names it. Disk-backed state is the caller's
+    scope (:func:`rocksdb_state`)."""
     spark = result.sparkSession
-    with ExitStack() as stack:
-        if n_state_partitions is not None:
-            stack.enter_context(state_partitions(spark, n_state_partitions))
-        if rocksdb:
-            stack.enter_context(rocksdb_state(spark))
-        ckpt = stack.enter_context(drain_checkpoint(query_name))
+    with state_partitions(spark, replay_state_partitions(result)), \
+            drain_checkpoint(query_name) as ckpt:
         q = (result.writeStream.format("memory").queryName(query_name)
              .option("checkpointLocation", ckpt)
              .outputMode(output_mode).trigger(availableNow=True).start())
         q.awaitTermination()
-    return spark.table(query_name)
+    return q

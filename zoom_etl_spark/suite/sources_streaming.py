@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 from ..catalog import table
 from ..registry import query
 from ..sources import rest
-from ..streaming.ingest import (read_events_stream, replay_state_partitions,
-                                run_available_now, windowed_counts)
+from ..streaming.ingest import (read_events_stream, run_available_now,
+                                windowed_counts)
 
 
 @query("paginated_scan", oracle="""
@@ -77,10 +77,8 @@ def stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     former rows-only row now carries the full value-hash gate."""
     stream = read_events_stream(spark, sf_dir)
     result = windowed_counts(stream, watermark="1 hour", window="1 day")
-    # windowed agg = stateful: opt in to small state-store sizing (the
-    # override is per-call now, not silently session-wide)
-    return run_available_now(result, "stream_ingest_result",
-                             n_state_partitions=replay_state_partitions(spark))
+    run_available_now(result, "stream_ingest_result")
+    return spark.table("stream_ingest_result")
 
 
 @query("stream_stateful", oracle="""
@@ -104,8 +102,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import user_lifetime_stats
     stream = read_events_stream(spark, sf_dir)
     out = user_lifetime_stats(stream)
-    run_available_now(out, "stream_stateful_result", output_mode="update",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_stateful_result", output_mode="update")
     log = spark.table("stream_stateful_result")
     return topk_per_group(log, keys=["user_id"],
                           order=[F.col("n_events").desc(),
@@ -129,8 +126,8 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select("event_id", "user_id",
                         F.col("c_name").alias("name"),
                         F.col("c_mktsegment").alias("segment")))
-    return run_available_now(enriched, "stream_enrich_out",
-                             output_mode="append")
+    run_available_now(enriched, "stream_enrich_out", output_mode="append")
+    return spark.table("stream_enrich_out")
 
 
 @query("stream_scd2_ivm", oracle="""
@@ -150,9 +147,7 @@ def stream_scd2_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import scd2_finalize, scd2_maintain
     stream = read_events_stream(spark, sf_dir)
     out = scd2_maintain(stream)
-    run_available_now(out, "stream_scd2_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+    run_available_now(out, "stream_scd2_log", output_mode="update")
     return scd2_finalize(spark.table("stream_scd2_log")).select(
         "user_id", "event_id", "state", "valid_from", "valid_to", "is_current")
 
@@ -264,8 +259,7 @@ def stream_lastwins_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import lastwins_finalize, lastwins_maintain
     stream = read_events_stream(spark, sf_dir)
     out = lastwins_maintain(stream)
-    run_available_now(out, "stream_lastwins_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_lastwins_log", output_mode="update")
     return lastwins_finalize(spark.table("stream_lastwins_log")).select(
         "user_id", "event_id", "event_type", "ts", "value")
 
@@ -291,8 +285,7 @@ def stream_windowed_agg_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(F.sum(F.col("value").cast("decimal(18,3)")), 3)
                 .cast("double").alias("total")))
     out = agg.select("user_id", F.col("w.start").alias("h"), "cnt", "total")
-    run_available_now(out, "stream_winagg_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_winagg_log", output_mode="update")
     log = spark.table("stream_winagg_log")
     return (log.groupBy("user_id", "h")
             .agg(F.max("cnt").alias("cnt"),
@@ -333,14 +326,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("user_id = e_user_id AND error_ts >= signup_ts "
                "AND error_ts < signup_ts + INTERVAL 1 HOUR"),
         "inner")
-    # 8 state partitions, not 16 (round-9 interleaved A/B, min-of-2:
-    # 7.75 s @16 -> 3.47 s @8 at sf0.1): a symmetric-hash stream-stream
-    # join keeps FOUR state stores per partition, so instance
-    # maintenance dominates a bounded replay well before state size
-    # does. Workload sizing, not cluster width — production raises it
-    # before first start (state_partitions docstring).
-    run_available_now(joined, "stream_ss_join_log", output_mode="append",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(joined, "stream_ss_join_log", output_mode="append")
     return spark.table("stream_ss_join_log").select(
         "user_id", "signup_id", "signup_ts",
         "error_id", "error_ts", "error_value")
@@ -448,10 +434,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. The full drained-set sandwich (must ⊆ drained ⊆ may)
     stays property-gated in test_sources_streaming.py."""
     joined = _ss_left_join_streams(spark, sf_dir)
-    # 8 state partitions, not 16 — same four-stores-per-partition
-    # measurement as stream_stream_join (7.52 s @16 -> 4.52 s @8).
-    run_available_now(joined, "stream_ss_ljoin_log", output_mode="append",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(joined, "stream_ss_ljoin_log", output_mode="append")
     e = table(spark, sf_dir, "events")
     wm = (e.groupBy("event_type").agg(F.max("ts").alias("mx"))
           .filter(F.col("event_type").isin("signup", "error"))
@@ -485,9 +468,7 @@ def stream_retract_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import changelog_fold, retract_maintain
     stream = read_events_stream(spark, sf_dir)
     log = retract_maintain(stream)
-    run_available_now(log, "stream_retract_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+    run_available_now(log, "stream_retract_log", output_mode="update")
     return changelog_fold(spark.table("stream_retract_log")).select(
         "user_id", "n_events", F.round("value_sum", 3).alias("value_sum"))
 
@@ -513,8 +494,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
                .dropDuplicatesWithinWatermark(["event_id"])
                .select("event_id", "user_id", "event_type", "ts",
                        F.round("value", 3).alias("val")))
-    run_available_now(deduped, "stream_dedup_log", output_mode="append",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(deduped, "stream_dedup_log", output_mode="append")
     return spark.table("stream_dedup_log")
 
 
@@ -557,8 +537,7 @@ def stream_session_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").alias("n_events")))
     out = agg.select("user_id", F.col("w.start").alias("session_start"),
                      "n_events")
-    run_available_now(out, "stream_session_log", output_mode="append",
-                        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_session_log", output_mode="append")
     return spark.table("stream_session_log")
 
 
@@ -663,8 +642,8 @@ def stream_temporal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", F.col("event_id").alias("purchase_id"),
                     "ts", F.round("value", 3).alias("amount")))
     out = _temporal_join(fact, _temporal_dim(spark, sf_dir))
-    return run_available_now(out, "stream_temporal_log",
-                             output_mode="append")
+    run_available_now(out, "stream_temporal_log", output_mode="append")
+    return spark.table("stream_temporal_log")
 
 
 @query("multimodal_framesample", oracle="""
@@ -821,9 +800,7 @@ def stream_anomaly_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import anomaly_maintain
     stream = read_events_stream(spark, sf_dir)
     out = anomaly_maintain(stream)
-    run_available_now(out, "stream_anom_log", output_mode="append",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(out, "stream_anom_log", output_mode="append")
     return spark.table("stream_anom_log").select(
         "user_id", "event_id", "is_anom")
 
@@ -856,8 +833,7 @@ def stream_topk_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import topk_finalize, topk_maintain
     stream = read_events_stream(spark, sf_dir)
     out = topk_maintain(stream)
-    run_available_now(out, "stream_topk_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_topk_log", output_mode="update")
     return topk_finalize(spark.table("stream_topk_log"))
 
 
@@ -941,9 +917,8 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .agg(F.sum("hn").alias("cnt"),
                         F.sum("hm").alias("milli")))
     out = daily.select(F.col("dw.start").alias("day"), "cnt", "milli")
-    return run_available_now(
-        out, "stream_chained_log", output_mode="append",
-        n_state_partitions=replay_state_partitions(spark))
+    run_available_now(out, "stream_chained_log", output_mode="append")
+    return spark.table("stream_chained_log")
 
 
 @query("stream_bitemporal_ivm", oracle="""
@@ -980,9 +955,7 @@ def stream_bitemporal_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 1000).cast("long").alias("value"),
         F.col("event_id").alias("tx"))
     out = bitemporal_maintain(assertions)
-    run_available_now(out, "stream_bt_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(out, "stream_bt_log", output_mode="update")
     bt = bitemporal_finalize(spark.table("stream_bt_log"))
     e = table(spark, sf_dir, "events")
     tcap = e.agg(F.expr("max(event_id) div 2").alias("tcap"))
@@ -1067,9 +1040,7 @@ def stream_bitemporal_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("tx"))
     run_available_now(
         bitemporal_maintain(assertions, tx_lateness=2 * mx // 3 + 2),
-        "stream_bt_late_log", output_mode="update",
-        n_state_partitions=replay_state_partitions(
-            spark, python_stateful=True))
+        "stream_bt_late_log", output_mode="update")
     bt = bitemporal_finalize(spark.table("stream_bt_late_log"))
     tcap = e.agg(F.expr("max(event_id) div 2").alias("tcap"))
     return (bt.crossJoin(F.broadcast(tcap))
@@ -1153,24 +1124,11 @@ def stream_alert_route(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))))
     agg = (stream.withWatermark("ts", "1 hour")
                  .groupBy(F.window("ts", "1 day")).count())
-    from ..streaming.ingest import drain_checkpoint, state_partitions
-    # the windowed aggregate is stateful: size its state-store instance
-    # count from the replay policy (this drain once inherited the
-    # session's 64 shuffle partitions — 64 near-empty state-store
-    # instances per micro-batch, the same instance-maintenance tax
-    # measured on the stream-stream joins).
-    with drain_checkpoint("alert_route") as ckpt, \
-            state_partitions(spark, replay_state_partitions(spark)):
-        q = (agg.writeStream.format("memory").queryName("alert_route_drain")
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination()
-        # progress is read SYNCHRONOUSLY off the finished query object
-        # (the engine records it as each batch completes), so there is
-        # no async listener-bus delivery to poll for — the old
-        # poll-with-20s-deadline was pure wait (round-9's worst
-        # in-suite regression came from exactly that wait under load)
-        progresses = q.recentProgress
+    # progress is read SYNCHRONOUSLY off the finished query object (the
+    # engine records it as each batch completes): no async listener-bus
+    # delivery to poll for
+    progresses = run_available_now(agg, "alert_route_drain",
+                                   output_mode="append").recentProgress
     m = StreamMetrics()
     for p in progresses:
         m.feed("alert_route_drain", progress_record(p))
@@ -1307,9 +1265,7 @@ def stream_cusum_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets = {r.event_type: int(r.mu) for r in cal.collect()}
     stream = read_events_stream(spark, sf_dir)
     out = cusum_maintain(stream, targets)
-    run_available_now(out, "stream_cusum_log", output_mode="append",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(out, "stream_cusum_log", output_mode="append")
     return spark.table("stream_cusum_log").select(
         "event_type", "event_id", "cusum_hi", "cusum_lo",
         "alarm_hi", "alarm_lo")
@@ -1356,9 +1312,7 @@ def stream_funnel_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import funnel_finalize, funnel_maintain
     stream = read_events_stream(spark, sf_dir)
     out = funnel_maintain(stream)
-    run_available_now(out, "stream_funnel_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(out, "stream_funnel_log", output_mode="update")
     emitted = spark.table("stream_funnel_log")
     return funnel_finalize(emitted).select("user_id", "stage_reached")
 
@@ -1416,9 +1370,7 @@ def stream_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (x.groupBy("event_type", "bucket")
               .agg(F.sum("isb").alias("nb"),
                    F.sum(1 - F.col("isb")).alias("nc")))
-    run_available_now(counts, "stream_drift_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(counts, "stream_drift_log", output_mode="update")
     c = (spark.table("stream_drift_log")
          .groupBy("event_type", "bucket")
          .agg(F.max("nb").alias("nb"), F.max("nc").alias("nc"))
@@ -1473,10 +1425,7 @@ def stream_shard_manifest_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count("*").alias("n_events"),
                 F.sum("cents").alias("cents"),
                 F.bit_xor("hv").alias("checksum")))
-    run_available_now(agg, "stream_shard_manifest_log",
-                      output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+    run_available_now(agg, "stream_shard_manifest_log", output_mode="update")
     log = spark.table("stream_shard_manifest_log")
     return (log.groupBy("shard")
             .agg(F.max("n_events").alias("n_events"),
