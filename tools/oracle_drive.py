@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Full-contract oracle drive at an arbitrary SF — the tool behind the
-three-SF correctness matrix (CORRECTNESS_SF0001_r06.json / the driver's
-sf0.01 gate / CORRECTNESS_SF01_r06.json).
+three-SF correctness matrix (the driver's sf0.01 gate; the retired
+ledgers are `git show 5f063be:CORRECTNESS_SF0001_r06.json` and
+`git show 5f063be:CORRECTNESS_SF01_r06.json`).
 
 Runs every registered query on a fresh driver-style session (plain
 ``SparkSession.builder`` + the engine's ``configure()`` path, launched

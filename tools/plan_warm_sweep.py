@@ -35,10 +35,10 @@ FINAL returned frame's exchange counts turn out repeat-stable for
 most of them, so cold+warm rows are pinned in the same golden
 (`queries_tier2`) and any query that probes unstable or errors gets a
 dated note (`tier2_notes`) instead of a silent hole. The tier-2 sweep
-drains/iterates per profile, so it runs as a per-round TOOL
-(--tier2 to regenerate, --check to diff against the golden — wired
-into tools/round_evidence.py), not inside pytest; pytest keeps
-asserting tier 1 every run.
+drains/iterates per profile, so it runs as a TOOL (--tier2 to
+regenerate, --check to diff against the golden — a tier-1 verify step
+in ROADMAP.md), not inside pytest; pytest keeps asserting tier 1
+every run.
 
 Regenerate (after an INTENDED plan change) with:
     python tools/plan_warm_sweep.py            # tier 1 (golden "queries")

@@ -36,6 +36,18 @@ _S = 1_000_000_000_000  # rank scale: 1.0 == 1e12
 _ITERS = 3
 
 
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The purchase graph's edge list: distinct (src=o_custkey,
+    dst=l_suppkey) pairs of orders ⋈ lineitem. Callers place their own
+    localCheckpoint."""
+    o = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    return (o.join(li, o["o_orderkey"] == li["l_orderkey"])
+             .select(F.col("o_custkey").alias("src"),
+                     F.col("l_suppkey").alias("dst"))
+             .distinct())
+
+
 def _pagerank_oracle() -> str:
     head = f"""
 WITH edges AS (
@@ -102,12 +114,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     degrees are localCheckpointed once and reused across iterations, so
     the orders⋈lineitem join runs exactly once.
     """.format(iters=_ITERS)
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    edges = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-              .select(F.col("o_custkey").alias("src"),
-                      F.col("l_suppkey").alias("dst"))
-              .distinct())
+    edges = _purchase_edges(spark, sf_dir)
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # attach out-degree to edges ONCE — the loop then only joins ranks
     edges_deg = edges.join(deg, "src").localCheckpoint(eager=False)
@@ -199,13 +206,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier-sized anti-join — linear in touched edges, the standard
     distributed BFS step. The edge list is localCheckpointed once;
     hops are a fixed constant so lineage is statically bounded."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    edges = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-              .select(F.col("o_custkey").alias("c"),
-                      F.col("l_suppkey").alias("s"))
-              .distinct()
-              .localCheckpoint(eager=False))
+    edges = (_purchase_edges(spark, sf_dir).toDF("c", "s")
+             .localCheckpoint(eager=False))
     nation = table(spark, sf_dir, "nation")
     supp = table(spark, sf_dir, "supplier")
     seed = (supp.join(nation, supp["s_nationkey"] == nation["n_nationkey"])
@@ -521,12 +523,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join + map-combined aggregate (the only |E|-sized work) and
     a 1-row max broadcast; edges localCheckpointed once, the
     orders⋈lineitem build runs exactly once."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    edges = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-              .select(F.col("o_custkey").alias("src"),
-                      F.col("l_suppkey").alias("dst"))
-              .distinct().localCheckpoint(eager=False))
+    edges = _purchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     h = edges.select("src").distinct() \
              .withColumn("h", F.lit(1000000).cast("long"))
     # Each raw half-step frame is consumed TWICE (its own max-norm
@@ -534,8 +531,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without truncation the final plan tree duplicates the edge-join
     # subtree 2^(2·iters) ≈ 64×, which round 9 measured as a
     # 566-shuffle-Exchange initial plan and ~10 s of re-executed
-    # subtrees at sf0.1 (plans/r09/graph_hits_before.txt). One
-    # localCheckpoint per half-step (the dedup/cluster.py iterative
+    # subtrees at sf0.1 (git show 7f9c6f7:plans/r09/graph_hits_before.txt).
+    # One localCheckpoint per half-step (the dedup/cluster.py iterative
     # discipline) keeps the plan linear in the iteration count; the
     # integer arithmetic is untouched, so the fixpoint values are
     # bit-identical.
@@ -625,12 +622,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpointed so lineage doesn't stack); output every node of
     the ORIGINAL graph with its final core degree and membership
     flag."""
-    o = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    e = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-          .select(F.col("o_custkey").alias("src"),
-                  F.col("l_suppkey").alias("dst"))
-          .distinct().localCheckpoint(eager=False))
+    e = _purchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     base = (e.select(F.lit("c").alias("kind"), F.col("src").alias("id"))
             .union(e.select(F.lit("s"), F.col("dst")))
             .distinct().localCheckpoint(eager=False))
